@@ -668,8 +668,8 @@ class Catalog:
 
     def set_order_hwm(self, name: str, version: str, value: Any) -> None:
         """Write-time high-water mark of the table's declared ordering
-        column for a version — harvested from parquet FOOTER stats at
-        write (node.py _track_order_hwm), so cursor seeks and stream
+        column for a version — the max over the version's file stats
+        entries (node.py _commit_stats), so cursor seeks and stream
         demos never pay a scan job for 'what is the max key'."""
         def fn(doc):
             _ensure_meta(doc, name).setdefault("order_hwms", {})[version] = _tag(value)
@@ -766,10 +766,10 @@ class Catalog:
 
     def set_file_stats(self, name: str, version: str, stats: dict) -> None:
         """Per-FILE column min/max/null stats for a version, harvested
-        from parquet footers at write time (node.py _track_write_stats)
-        — the engine's data-skipping index. Shape:
-        {relpath: {"rows": n, "cols": {col: {"min": v, "max": v,
-        "nulls": n} | {"absent": True}}}}. This is the catalog-side
+        at write time (node.py _write_stats / _commit_stats) — the
+        engine's data-skipping index. Shape: {relpath: {"rows": n,
+        "cols": {col: {"min": v, "max": v, "nulls": n[, "bloom": hex]}
+        | {"absent": True}}}}. This is the catalog-side
         analogue of a Delta transaction-log stats checkpoint: at
         cluster scale the planner prunes files from METADATA instead
         of opening O(files) footers per query."""

@@ -133,18 +133,25 @@ def carry(catalog, table: str, dst_version: str, refs: list[str]) -> list[str]:
     return out
 
 
-def record(catalog, table: str, version: str, carried: list[str] | None = None) -> list[str]:
-    """Persist the version's manifest: every file in its own directory
-    plus ``carried`` refs (deduplicated — hardlink-mode carries are
-    already own files). Call after ANY physical write into a version
-    directory; appends must re-pass previously carried external refs
-    (see external_refs) or they would be dropped."""
+def refs_for(catalog, table: str, version: str, carried: list[str] | None = None) -> list[str]:
+    """The manifest ``record`` would persist: every file in the
+    version's own directory plus ``carried`` refs (deduplicated —
+    hardlink-mode carries are already own files). Metadata-only."""
     refs = own_refs(catalog, table, version)
     seen = set(refs)
     for ref in carried or []:
         if ref not in seen:
             refs.append(ref)
             seen.add(ref)
+    return refs
+
+
+def record(catalog, table: str, version: str, carried: list[str] | None = None) -> list[str]:
+    """Persist the version's manifest (refs_for). Call after ANY
+    physical write into a version directory; appends must re-pass
+    previously carried external refs (see external_refs) or they would
+    be dropped."""
+    refs = refs_for(catalog, table, version, carried)
     catalog.set_manifest(table, version, refs)
     return refs
 

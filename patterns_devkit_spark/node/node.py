@@ -717,48 +717,79 @@ class Table:
         seen: set[str] = set()
         return [c for c in cols if not (c in seen or seen.add(c))]
 
-    def _track_write_stats(self, storage: str, meta: dict, version: str) -> None:
-        """One footer-only walk per write: per-file min/max stats into
-        the catalog (the data-skipping index read_pruned plans from)
-        plus the ordering high-water mark. At cluster scale this walk
-        is incremental (new files only); locally a full rewalk is
-        O(files) metadata reads."""
-        from . import skipping
+    def _write_stats(
+        self,
+        meta: dict,
+        version: str,
+        refs: list[str],
+        parent: tuple[str, str] | None = None,
+        remap: dict[str, str] | None = None,
+        compute: bool = True,
+    ) -> dict | None:
+        """Skipping-index entries for ``version``'s files ``refs``
+        (stats keys -> entries), gathered BEFORE the write's commit so
+        no file read or hash runs under the catalog's commit lock. A
+        file carried from ``parent`` = (table, version) — ``remap`` maps
+        its parent ref to its new ref, the same remap the deletion
+        vectors ride — copies the parent's entry; only the files the
+        write produced (or carried files the parent never indexed) are
+        read: footer bounds for the stat columns, and a Bloom bitmap per
+        declared bloom column where the file is under the cap
+        (skipping.file_entry). ``compute=False`` copies entries only
+        (zero-copy restore/clone). A file whose stats cannot be read
+        gets no entry; _commit_stats handles the gap. None = the table
+        tracks no stats."""
+        from . import manifest, skipping
 
-        cols = self._stat_cols(meta)
-        bloom_cols = meta.get("bloom_columns") or []
-        ob = meta.get("strictly_monotonic_ordering") or meta.get("created_ordering")
-        if not cols and not bloom_cols:
-            return
-        try:
-            stats = skipping.collect_file_stats(storage, cols or bloom_cols)
-        except Exception:
-            return  # stats unavailable: order_max()/read_pruned fall back
-        if bloom_cols:
-            # declared-only data pass: Bloom bitmaps ride the same stats
-            # entries, so prune() consults them with zero extra plumbing
-            try:
-                blooms = skipping.collect_file_blooms(storage, bloom_cols)
-                for rel, cols_map in blooms.items():
-                    entry = stats.setdefault(rel, {"rows": None, "cols": {}})
-                    for col, hx in cols_map.items():
-                        entry["cols"].setdefault(col, {})["bloom"] = hx
-            except Exception:
-                pass  # bloom unavailable: bounds-only pruning still works
-        self._engine.catalog.set_file_stats(self.store_name, version, stats)
-        if ob:
-            mx = _stats_col_max(stats, ob)
-            # never LOWER a version's hwm: the walk covers only the
-            # version's own directory, and carried (reference-mode)
-            # files may hold the real max — appends only raise it
-            prior = self._engine.catalog.get_order_hwm(self.store_name, version)
-            if prior is not None:
+        bloom_cols = list(meta.get("bloom_columns") or [])
+        cols = list(dict.fromkeys([*self._stat_cols(meta), *bloom_cols]))
+        if not cols:
+            return None
+        cat = self._engine.catalog
+        src_of = {new: old for old, new in (remap or {}).items()}
+        prior = (cat.get_file_stats(*parent) or {}) if parent and src_of else {}
+        entries: dict[str, dict] = {}
+        for ref in refs:
+            old = src_of.get(ref)
+            entry = prior.get(manifest.stats_key(old, *parent)) if old else None
+            if compute and (entry is None or not skipping.entry_covers(entry, cols, bloom_cols)):
                 try:
-                    mx = prior if mx is None or prior > mx else mx
-                except TypeError:
-                    pass
-            if mx is not None:
-                self._engine.catalog.set_order_hwm(self.store_name, version, mx)
+                    entry = skipping.file_entry(
+                        manifest.resolve(cat, self.store_name, version, ref),
+                        manifest.ref_relpath(ref), cols, bloom_cols,
+                    )
+                except Exception:
+                    entry = None  # no entry: read_pruned backfills or scans
+            if entry is not None:
+                entries[manifest.stats_key(ref, self.store_name, version)] = entry
+        return entries
+
+    def _commit_stats(self, version: str, entries: dict | None, refs: list[str]) -> None:
+        """The metadata half of write-time stats, run inside the write's
+        commit_batch: set_file_stats and set_order_hwm, no file reads.
+        Entries another in-place append committed meanwhile are kept.
+        The ordering high-water mark is the max over the entries — they
+        cover carried files too — and is cleared when a file lacks one
+        (order_max then scans)."""
+        if entries is None:
+            return
+        from . import manifest
+
+        cat = self._engine.catalog
+        cur = cat.get_file_stats(self.store_name, version) or {}
+        stats = {}
+        for ref in refs:
+            key = manifest.stats_key(ref, self.store_name, version)
+            entry = entries.get(key) or cur.get(key)
+            if entry is not None:
+                stats[key] = entry
+        cat.set_file_stats(self.store_name, version, stats)
+        meta = cat.table_meta(self.store_name) or {}
+        ob = meta.get("strictly_monotonic_ordering") or meta.get("created_ordering")
+        if ob:
+            mx = _stats_col_max(stats, ob) if len(stats) == len(refs) else None
+            if mx is not None or cat.get_order_hwm(self.store_name, version) is not None:
+                cat.set_order_hwm(self.store_name, version, mx)
 
     def order_max(self):
         """Max value of the declared ordering column in the active
@@ -1578,6 +1609,7 @@ class Table:
             df = self._sorted_for_write(df, meta)
             self._writer(df, meta).mode("overwrite").parquet(out_dir)
             carried: list[str] = []
+            untouched: list[str] = []
             if scoped:
                 touched_strs = {self._hive_value_str(v) for v in touched}
                 untouched = [
@@ -1585,13 +1617,17 @@ class Table:
                     if _mf.partition_segment_value(r, part_cols[0]) not in touched_strs
                 ]
                 carried = _mf.carry(catalog, self.store_name, new_version, untouched)
-            _mf.record(catalog, self.store_name, new_version, carried)
+            new_refs = _mf.record(catalog, self.store_name, new_version, carried)
             # the count is a Spark job — run it BEFORE the commit batch
             # (never hold the catalog's cross-process exclusion over a job)
             if _mf.has_external_refs(catalog, self.store_name, new_version):
                 n = TableVersion(self._engine, self.store_name, new_version).as_dataframe().count()
             else:
                 n = self._engine.spark.read.parquet(out_dir).count()
+            entries = self._write_stats(
+                meta, new_version, new_refs, (self.store_name, av.version_id) if scoped else None,
+                dict(zip(untouched, carried)),
+            )
             # MERGE is read-modify-write: compare-and-swap against the
             # base version this upsert READ (optimistic concurrency).
             # On CAS refusal the just-written version is an orphan —
@@ -1603,9 +1639,7 @@ class Table:
             try:
                 with catalog.commit_batch():
                     catalog.set_record_count(self.store_name, new_version, n)
-                    self._track_write_stats(out_dir, meta, new_version)
-                    if scoped:
-                        self._carry_order_hwm(new_version, self.store_name, av.version_id)
+                    self._commit_stats(new_version, entries, new_refs)
                     catalog.set_active_version(
                         self.store_name, new_version,
                         expected_parent=av.version_id if av is not None else None,
@@ -1651,12 +1685,19 @@ class Table:
             # refs carried from other versions (a reference-mode clone
             # being appended to) must survive the manifest refresh
             ext = _mf.external_refs(catalog, self.store_name, av.version_id)
+            prev_refs = catalog.get_manifest(self.store_name, av.version_id) or []
             self._writer(df, write_meta).mode("append").parquet(av.storage)
             batch_n = df.count()  # Spark job: before the commit batch
+            # stats only for the files this append added; the version's
+            # earlier files keep their entries
+            entries = self._write_stats(
+                meta, av.version_id, _mf.refs_for(catalog, self.store_name, av.version_id, ext),
+                (self.store_name, av.version_id), {r: r for r in prev_refs},
+            )
             with catalog.commit_batch():
-                _mf.record(catalog, self.store_name, av.version_id, ext)
+                refs = _mf.record(catalog, self.store_name, av.version_id, ext)
                 catalog.set_record_count(self.store_name, av.version_id, prev + batch_n)
-                self._track_write_stats(av.storage, meta, av.version_id)
+                self._commit_stats(av.version_id, entries, refs)
         # persist the MERGED schema (driver-side union of existing +
         # batch): the version dir may hold files with different column
         # sets, and reads pin to this schema (TableVersion.as_dataframe)
@@ -1787,15 +1828,18 @@ class Table:
         old_n = catalog.get_record_count(self.store_name, av.version_id)
         if old_n is None:
             old_n = av.as_dataframe().count()  # Spark job: before the commit
+        new_refs = _mf.refs_for(catalog, self.store_name, new_version, carried)
+        entries = self._write_stats(
+            meta, new_version, new_refs, (self.store_name, av.version_id), remap
+        )
         try:
             with catalog.commit_batch():
-                _mf.record(catalog, self.store_name, new_version, carried)
+                catalog.set_manifest(self.store_name, new_version, new_refs)
                 catalog.set_deletion_vectors(self.store_name, new_version, dvs)
                 catalog.set_record_count(
                     self.store_name, new_version, old_n - len(doomed) + batch_n
                 )
-                self._track_write_stats(out_dir, meta, new_version)
-                self._carry_order_hwm(new_version, self.store_name, av.version_id)
+                self._commit_stats(new_version, entries, new_refs)
                 catalog.set_active_version(
                     self.store_name, new_version, expected_parent=av.version_id
                 )
@@ -1843,23 +1887,6 @@ class Table:
         if not total or len(kept) == total:
             return None
         return kept
-
-    def _carry_order_hwm(self, new_version: str, src_name: str, src_version: str) -> None:
-        """Propagate the ordering high-water mark through a zero-copy
-        carry: carried files may hold the table's max order value, and
-        the own-directory footer walk (_track_write_stats) cannot see
-        them in reference mode. The new version's hwm becomes
-        max(own-walk hwm, source version hwm)."""
-        cat = self._engine.catalog
-        src = cat.get_order_hwm(src_name, src_version)
-        if src is None:
-            return
-        cur = cat.get_order_hwm(self.store_name, new_version)
-        try:
-            best = src if cur is None or src > cur else cur
-        except TypeError:
-            return
-        cat.set_order_hwm(self.store_name, new_version, best)
 
     @staticmethod
     def _hive_value_str(v) -> str:
@@ -2371,10 +2398,13 @@ class Table:
         self._writer(self._sorted_for_write(df, meta), meta).mode("overwrite").parquet(out)
         from . import manifest as _mf
 
-        _mf.record(catalog, self.store_name, vid)
+        refs = _mf.refs_for(catalog, self.store_name, vid)
         n = self._engine.spark.read.parquet(out).count()
-        catalog.set_record_count(self.store_name, vid, n)
-        self._track_write_stats(out, meta, vid)
+        entries = self._write_stats(meta, vid, refs)
+        with catalog.commit_batch():
+            catalog.set_manifest(self.store_name, vid, refs)
+            catalog.set_record_count(self.store_name, vid, n)
+            self._commit_stats(vid, entries, refs)
         return TableVersion(self._engine, self.store_name, vid)
 
     def publish(self, version_id: str, checks: dict[str, str] | None = None) -> "TableVersion":
@@ -2486,12 +2516,17 @@ class Table:
         old_n = catalog.get_record_count(self.store_name, av.version_id)
         if old_n is None:
             old_n = av.as_dataframe().count()  # Spark job: before the commit
+        new_refs = _mf.refs_for(catalog, self.store_name, new_version, carried)
+        entries = self._write_stats(
+            catalog.table_meta(self.store_name) or {}, new_version, new_refs,
+            (self.store_name, av.version_id), remap,
+        )
         try:
             with catalog.commit_batch():
-                _mf.record(catalog, self.store_name, new_version, carried)
+                catalog.set_manifest(self.store_name, new_version, new_refs)
                 catalog.set_deletion_vectors(self.store_name, new_version, dvs)
                 catalog.set_record_count(self.store_name, new_version, old_n - n)
-                self._carry_order_hwm(new_version, self.store_name, av.version_id)
+                self._commit_stats(new_version, entries, new_refs)
                 catalog.set_active_version(
                     self.store_name, new_version, expected_parent=av.version_id
                 )
@@ -2603,13 +2638,16 @@ class Table:
         old_n = catalog.get_record_count(self.store_name, av.version_id)
         if old_n is None:
             old_n = av.as_dataframe().count()  # Spark job: before the commit
+        new_refs = _mf.refs_for(catalog, self.store_name, new_version, carried)
+        entries = self._write_stats(
+            meta, new_version, new_refs, (self.store_name, av.version_id), remap
+        )
         try:
             with catalog.commit_batch():
-                _mf.record(catalog, self.store_name, new_version, carried)
+                catalog.set_manifest(self.store_name, new_version, new_refs)
                 catalog.set_deletion_vectors(self.store_name, new_version, dvs)
                 catalog.set_record_count(self.store_name, new_version, old_n)
-                self._track_write_stats(out_dir, meta, new_version)
-                self._carry_order_hwm(new_version, self.store_name, av.version_id)
+                self._commit_stats(new_version, entries, new_refs)
                 catalog.set_active_version(
                     self.store_name, new_version, expected_parent=av.version_id
                 )
@@ -2667,12 +2705,16 @@ class Table:
         if old_n is None:
             old_n = av.as_dataframe().count()  # Spark job: before the commit
         n_purged = sum(len(v) for v in dvs.values())
+        new_refs = _mf.refs_for(catalog, self.store_name, new_version, carried)
+        entries = self._write_stats(
+            meta, new_version, new_refs, (self.store_name, av.version_id),
+            dict(zip(clean_refs, carried)),
+        )
         try:
             with catalog.commit_batch():
-                _mf.record(catalog, self.store_name, new_version, carried)
+                catalog.set_manifest(self.store_name, new_version, new_refs)
                 catalog.set_record_count(self.store_name, new_version, old_n)
-                self._track_write_stats(out_dir, meta, new_version)
-                self._carry_order_hwm(new_version, self.store_name, av.version_id)
+                self._commit_stats(new_version, entries, new_refs)
                 catalog.set_active_version(
                     self.store_name, new_version, expected_parent=av.version_id
                 )
@@ -2789,17 +2831,19 @@ class Table:
         if old_n is None:
             old_n = old.count()  # Spark job: before the commit batch
         new_n = old_n - n_matched if assignments is None else old_n
+        new_refs = _mf.refs_for(catalog, self.store_name, new_version, carried)
+        entries = self._write_stats(
+            meta, new_version, new_refs, (self.store_name, av.version_id),
+            dict(zip(untouched, carried)),
+        )
         # DELETE/UPDATE is read-modify-write: CAS against the read base;
         # a refused flip drops the orphan version before re-raising.
         # Manifest/count/stats/hwm/flip/GC are ONE catalog commit.
         try:
             with catalog.commit_batch():
-                _mf.record(catalog, self.store_name, new_version, carried)
+                catalog.set_manifest(self.store_name, new_version, new_refs)
                 catalog.set_record_count(self.store_name, new_version, new_n)
-                self._track_write_stats(out_dir, meta, new_version)
-                # hwm carry is conservative-high after a DELETE of the max
-                # row (a high-water mark, same as retained footer stats)
-                self._carry_order_hwm(new_version, self.store_name, av.version_id)
+                self._commit_stats(new_version, entries, new_refs)
                 catalog.set_active_version(self.store_name, new_version, expected_parent=av.version_id)
                 catalog.gc_versions(self.store_name)
         except ConcurrentWriteError:
@@ -2819,15 +2863,17 @@ class Table:
         self._writer(self._sorted_for_write(df, meta), meta).mode("overwrite").parquet(out)
         from . import manifest as _mf
 
-        _mf.record(catalog, self.store_name, vid)
-        catalog.set_active_version(self.store_name, vid)
-        catalog.update_table_meta(
-            self.store_name,
-            schema_ddl=",".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in self._engine.spark.read.parquet(out).schema.fields
-            ),
+        refs = _mf.refs_for(catalog, self.store_name, vid)
+        entries = self._write_stats(meta, vid, refs)
+        schema_ddl = ",".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in self._engine.spark.read.parquet(out).schema.fields
         )
-        catalog.gc_versions(self.store_name)
+        with catalog.commit_batch():
+            catalog.set_manifest(self.store_name, vid, refs)
+            self._commit_stats(vid, entries, refs)
+            catalog.set_active_version(self.store_name, vid)
+            catalog.update_table_meta(self.store_name, schema_ddl=schema_ddl)
+            catalog.gc_versions(self.store_name)
         if created:
             self.signal_create()
         else:
@@ -2880,11 +2926,15 @@ class Table:
         out = catalog.version_dir(self.store_name, vid)
         meta = catalog.table_meta(self.store_name) or {}
         self._writer(self._sorted_for_write(df, meta), meta).mode("overwrite").parquet(out)
-        _mf.record(catalog, self.store_name, vid)
-        catalog.set_active_version(self.store_name, vid)
-        if n_before is not None:
-            catalog.set_record_count(self.store_name, vid, n_before)
-        catalog.gc_versions(self.store_name)
+        refs = _mf.refs_for(catalog, self.store_name, vid)
+        entries = self._write_stats(meta, vid, refs)
+        with catalog.commit_batch():
+            catalog.set_manifest(self.store_name, vid, refs)
+            catalog.set_active_version(self.store_name, vid)
+            if n_before is not None:
+                catalog.set_record_count(self.store_name, vid, n_before)
+            self._commit_stats(vid, entries, refs)
+            catalog.gc_versions(self.store_name)
         self.signal_update()
         return TableVersion(self._engine, self.store_name, vid)
 
@@ -2928,11 +2978,15 @@ class Table:
         self._writer(out_df, meta).mode("overwrite").parquet(out)
         from . import manifest as _mf
 
-        _mf.record(catalog, self.store_name, created_vid)
-        catalog.set_active_version(self.store_name, created_vid)
-        if n_before is not None:
-            catalog.set_record_count(self.store_name, created_vid, n_before)
-        catalog.gc_versions(self.store_name)
+        refs = _mf.refs_for(catalog, self.store_name, created_vid)
+        entries = self._write_stats(meta, created_vid, refs)
+        with catalog.commit_batch():
+            catalog.set_manifest(self.store_name, created_vid, refs)
+            catalog.set_active_version(self.store_name, created_vid)
+            if n_before is not None:
+                catalog.set_record_count(self.store_name, created_vid, n_before)
+            self._commit_stats(created_vid, entries, refs)
+            catalog.gc_versions(self.store_name)
         self.signal_update()
         return TableVersion(self._engine, self.store_name, created_vid)
 
@@ -3072,16 +3126,22 @@ class Table:
         vid = catalog.create_new_version(self.store_name)
         src_refs = _mf.version_refs(catalog, self.store_name, version_id)
         carried = _mf.carry(catalog, self.store_name, vid, src_refs)
-        _mf.record(catalog, self.store_name, vid, carried)
-        _carry_deletion_vectors(
-            catalog, self.store_name, version_id, self.store_name, vid, src_refs, carried
+        refs = _mf.refs_for(catalog, self.store_name, vid, carried)
+        entries = self._write_stats(
+            catalog.table_meta(self.store_name) or {}, vid, refs,
+            (self.store_name, version_id), dict(zip(src_refs, carried)), compute=False,
         )
-        catalog.set_active_version(self.store_name, vid)
-        n = catalog.get_record_count(self.store_name, version_id)
-        if n is not None:
-            catalog.set_record_count(self.store_name, vid, n)
-        self._carry_order_hwm(vid, self.store_name, version_id)
-        catalog.gc_versions(self.store_name)
+        with catalog.commit_batch():
+            catalog.set_manifest(self.store_name, vid, refs)
+            _carry_deletion_vectors(
+                catalog, self.store_name, version_id, self.store_name, vid, src_refs, carried
+            )
+            catalog.set_active_version(self.store_name, vid)
+            n = catalog.get_record_count(self.store_name, version_id)
+            if n is not None:
+                catalog.set_record_count(self.store_name, vid, n)
+            self._commit_stats(vid, entries, refs)
+            catalog.gc_versions(self.store_name)
         self.signal_update()
         return TableVersion(self._engine, self.store_name, vid)
 
@@ -3146,15 +3206,21 @@ class Table:
         vid = catalog.create_new_version(self.store_name)
         src_refs = _mf.version_refs(catalog, source_table, src_av)
         carried = _mf.carry(catalog, self.store_name, vid, src_refs)
-        _mf.record(catalog, self.store_name, vid, carried)
-        _carry_deletion_vectors(
-            catalog, source_table, src_av, self.store_name, vid, src_refs, carried
+        refs = _mf.refs_for(catalog, self.store_name, vid, carried)
+        entries = self._write_stats(
+            catalog.table_meta(self.store_name) or {}, vid, refs,
+            (source_table, src_av), dict(zip(src_refs, carried)), compute=False,
         )
-        catalog.set_active_version(self.store_name, vid)
-        n = catalog.get_record_count(source_table, src_av)
-        if n is not None:
-            catalog.set_record_count(self.store_name, vid, n)
-        self._carry_order_hwm(vid, source_table, src_av)
+        with catalog.commit_batch():
+            catalog.set_manifest(self.store_name, vid, refs)
+            _carry_deletion_vectors(
+                catalog, source_table, src_av, self.store_name, vid, src_refs, carried
+            )
+            catalog.set_active_version(self.store_name, vid)
+            n = catalog.get_record_count(source_table, src_av)
+            if n is not None:
+                catalog.set_record_count(self.store_name, vid, n)
+            self._commit_stats(vid, entries, refs)
         self.signal_create()
         return TableVersion(self._engine, self.store_name, vid)
 

@@ -10,11 +10,20 @@ from its warehouse's zone maps; our SURVEY.md §4 notes min/max
 pruning as the physical-design lever). This module is that index for
 the engine's versioned tables:
 
-- ``collect_file_stats(root, cols)``: one metadata-only walk of a
-  version directory -> {relpath: {"rows", "cols": {col: bounds}}}.
-  Hive ``col=value`` path segments are parsed so partition columns
-  get exact per-file bounds even though they are not stored in the
-  files themselves.
+- ``file_entry(path, rel, cols, bloom_cols)``: the stats entry of ONE
+  file, {"rows", "cols": {col: bounds}} from its footer, plus a Bloom
+  bitmap per declared bloom column when the file holds at most
+  BLOOM_MAX_KEYS distinct values (a fuller bitmap saturates and can
+  never prune). Hive ``col=value`` path segments are parsed so
+  partition columns get exact per-file bounds even though they are
+  not stored in the files themselves. Writers call it only for the
+  files they wrote, BEFORE their catalog commit, and copy the parent
+  version's entries for carried files (node.py Table._write_stats;
+  ``entry_covers`` says when a copied entry is complete), so a
+  write's stats cost is proportional to the write, not the table.
+- ``collect_file_stats(root, cols)``: footer bounds for every file of
+  a version directory — the lazy backfill for legacy versions and
+  columns outside the write-time stat set.
 - ``prune(stats, predicates)``: conjunctive predicate evaluation
   against those bounds. A file is dropped only when its stats PROVE
   no row can match; any uncertainty (missing stats, cross-type
@@ -30,6 +39,7 @@ them with NULL on read) are provably prunable.
 """
 from __future__ import annotations
 
+import math
 import os
 import urllib.parse
 from typing import Any, Iterable
@@ -71,6 +81,77 @@ def _partition_values(relpath: str) -> dict[str, Any]:
     return out
 
 
+def _footer_bounds(md, names: list[str], rel: str, cols: list[str]) -> dict[str, Any]:
+    """Per-column bounds of one file from its parquet footer (see
+    collect_file_stats for the shapes)."""
+    pvals = _partition_values(rel)
+    entry: dict[str, Any] = {}
+    for col in cols:
+        if col in pvals:
+            v = pvals[col]
+            entry[col] = (
+                {"min": None, "max": None, "nulls": md.num_rows}
+                if v is None
+                else {"min": v, "max": v, "nulls": 0}
+            )
+            continue
+        if col not in names:
+            entry[col] = {"absent": True}
+            continue
+        ci = names.index(col)
+        mn = mx = None
+        nulls = 0
+        usable = True
+        for rg in range(md.num_row_groups):
+            rgm = md.row_group(rg)
+            st = rgm.column(ci).statistics
+            if st is None:
+                usable = False
+                break
+            n_null = st.null_count
+            if st.has_min_max:
+                if n_null is None:
+                    n_null = 0  # unknown nulls don't affect min/max pruning
+                try:
+                    mn = st.min if mn is None or st.min < mn else mn
+                    mx = st.max if mx is None or st.max > mx else mx
+                except TypeError:
+                    usable = False
+                    break
+            elif n_null is not None and n_null == rgm.num_rows:
+                pass  # all-null row group: contributes no values
+            else:
+                usable = False
+                break
+            nulls += n_null
+        if usable:
+            entry[col] = {"min": mn, "max": mx, "nulls": nulls}
+    return entry
+
+
+def file_entry(path: str, rel: str, cols: Iterable[str], bloom_cols: Iterable[str] = ()) -> dict:
+    """The stats entry of ONE data file: footer bounds for ``cols``
+    (``rel`` is the file's path inside its version directory, whose
+    hive segments give partition columns exact bounds), plus a Bloom
+    bitmap for each of ``bloom_cols`` stored in the file with at most
+    BLOOM_MAX_KEYS distinct non-null values. Bloom columns read the
+    column's data (pyarrow, no Spark job); bounds read the footer only."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    names = md.schema.to_arrow_schema().names
+    entry = {"rows": md.num_rows, "cols": _footer_bounds(md, names, rel, list(cols))}
+    present = [c for c in bloom_cols if c in names]
+    if present:
+        tbl = pf.read(columns=present)
+        for col in present:
+            vals = tbl.column(col).unique().drop_null()
+            if len(vals) <= BLOOM_MAX_KEYS:
+                entry["cols"].setdefault(col, {})["bloom"] = bloom_bitmap(vals.to_pylist())
+    return entry
+
+
 def collect_file_stats(root: str, cols: Iterable[str]) -> dict[str, dict]:
     """Per-file bounds for `cols` under a version dir — parquet FOOTER
     reads only, never a data scan. Per column one of:
@@ -81,8 +162,6 @@ def collect_file_stats(root: str, cols: Iterable[str]) -> dict[str, dict]:
       missing key                       -- stats unavailable: never
                                            prune on this column
     """
-    import pyarrow.parquet as pq
-
     cols = list(cols)
     out: dict[str, dict] = {}
     for dirpath, _dirs, files in os.walk(root):
@@ -91,52 +170,26 @@ def collect_file_stats(root: str, cols: Iterable[str]) -> dict[str, dict]:
                 continue
             full = os.path.join(dirpath, fn)
             rel = os.path.relpath(full, root)
-            md = pq.ParquetFile(full).metadata
-            names = md.schema.to_arrow_schema().names
-            pvals = _partition_values(rel)
-            entry: dict[str, Any] = {}
-            for col in cols:
-                if col in pvals:
-                    v = pvals[col]
-                    entry[col] = (
-                        {"min": None, "max": None, "nulls": md.num_rows}
-                        if v is None
-                        else {"min": v, "max": v, "nulls": 0}
-                    )
-                    continue
-                if col not in names:
-                    entry[col] = {"absent": True}
-                    continue
-                ci = names.index(col)
-                mn = mx = None
-                nulls = 0
-                usable = True
-                for rg in range(md.num_row_groups):
-                    rgm = md.row_group(rg)
-                    st = rgm.column(ci).statistics
-                    if st is None:
-                        usable = False
-                        break
-                    n_null = st.null_count
-                    if st.has_min_max:
-                        if n_null is None:
-                            n_null = 0  # unknown nulls don't affect min/max pruning
-                        try:
-                            mn = st.min if mn is None or st.min < mn else mn
-                            mx = st.max if mx is None or st.max > mx else mx
-                        except TypeError:
-                            usable = False
-                            break
-                    elif n_null is not None and n_null == rgm.num_rows:
-                        pass  # all-null row group: contributes no values
-                    else:
-                        usable = False
-                        break
-                    nulls += n_null
-                if usable:
-                    entry[col] = {"min": mn, "max": mx, "nulls": nulls}
-            out[rel] = {"rows": md.num_rows, "cols": entry}
+            out[rel] = file_entry(full, rel, cols)
     return out
+
+
+def entry_covers(entry: dict, cols: Iterable[str], bloom_cols: Iterable[str]) -> bool:
+    """True when ``entry`` already holds what a write harvests for its
+    file: bounds for every column, and a bitmap for every Bloom column
+    the file stores, unless the file may exceed the cap (a file of at
+    most BLOOM_MAX_KEYS rows without a bitmap was never indexed)."""
+    info = entry.get("cols") or {}
+    if any(c not in info for c in cols):
+        return False
+    rows = entry.get("rows")
+    for col in bloom_cols:
+        ci = info.get(col) or {}
+        if ci.get("absent") or "bloom" in ci:
+            continue
+        if rows is None or rows <= BLOOM_MAX_KEYS:
+            return False
+    return True
 
 
 # -- per-file Bloom value index (equality skipping beyond min/max) -----
@@ -152,6 +205,11 @@ def collect_file_stats(root: str, cols: Iterable[str]) -> dict[str, dict]:
 
 BLOOM_BITS = 8192  # 1 KiB bitmap per (file, column)
 BLOOM_K = 4
+# The most distinct values the bitmap holds at its optimal fill (half
+# the bits set): m*ln2/k ~= 1,419 keys at ~6 % false positives. Past it
+# the bitmap saturates (a ~37.5k-key file sets all 8,192 bits), so a
+# file with more distinct values gets bounds only.
+BLOOM_MAX_KEYS = int(BLOOM_BITS * math.log(2) / BLOOM_K)
 
 
 def _bloom_canon(value: Any) -> str:
@@ -174,39 +232,15 @@ def _bloom_positions(value: Any, bits: int = BLOOM_BITS, k: int = BLOOM_K) -> li
     ]
 
 
-def collect_file_blooms(root: str, cols: Iterable[str], bits: int = BLOOM_BITS, k: int = BLOOM_K) -> dict[str, dict]:
-    """{relpath: {col: hex_bitmap}} — ONE columnar read of only the
-    indexed columns per file (pyarrow, no Spark job). Unlike the
-    footer stats this touches data, so it runs only for columns the
-    table DECLARES (init(bloom_columns=...)). NULLs are not inserted
-    (equality predicates never match NULL)."""
-    import pyarrow.parquet as pq
-
-    cols = list(cols)
-    out: dict[str, dict] = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for fn in sorted(files):
-            if not fn.endswith(".parquet"):
-                continue
-            full = os.path.join(dirpath, fn)
-            rel = os.path.relpath(full, root)
-            pf = pq.ParquetFile(full)
-            names = pf.metadata.schema.to_arrow_schema().names
-            present = [c for c in cols if c in names]
-            if not present:
-                continue
-            tbl = pf.read(columns=present)
-            entry: dict[str, str] = {}
-            for col in present:
-                bitmap = bytearray(bits // 8)
-                for v in tbl.column(col).unique().to_pylist():
-                    if v is None:
-                        continue
-                    for pos in _bloom_positions(v, bits, k):
-                        bitmap[pos >> 3] |= 1 << (pos & 7)
-                entry[col] = bytes(bitmap).hex()
-            out[rel] = entry
-    return out
+def bloom_bitmap(values: list, bits: int = BLOOM_BITS, k: int = BLOOM_K) -> str:
+    """Hex bitmap of distinct non-null values (equality predicates never
+    match NULL, so nulls are never inserted). Callers hold it to
+    BLOOM_MAX_KEYS values."""
+    bitmap = bytearray(bits // 8)
+    for v in values:
+        for pos in _bloom_positions(v, bits, k):
+            bitmap[pos >> 3] |= 1 << (pos & 7)
+    return bytes(bitmap).hex()
 
 
 def bloom_may_contain(hex_bitmap: str, value: Any, bits: int = BLOOM_BITS, k: int = BLOOM_K) -> bool:

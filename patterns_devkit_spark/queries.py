@@ -38,11 +38,14 @@ ORACLES: dict[str, str] = {}
 def _ensure_session_confs(spark: SparkSession) -> None:
     """The driver may call us with ITS OWN SparkSession: enforce the
     runtime confs correctness depends on — UTC session timezone (or
-    timestamp values drift vs the DuckDB oracle) and nanosAsLong (or
-    reading events.parquet's TIMESTAMP(NANOS) raises)."""
+    timestamp values drift vs the DuckDB oracle), nanosAsLong (or
+    reading events.parquet's TIMESTAMP(NANOS) raises) and ANSI mode
+    (integer overflow raises rather than wrapping into a wrong
+    answer)."""
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
     except Exception:
         pass  # conf locked down: proceed with session defaults
 

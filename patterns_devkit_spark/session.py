@@ -25,6 +25,9 @@ def get_spark(app_name: str = "patterns-devkit-spark", shuffle_partitions: int |
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # ANSI arithmetic: integer overflow raises instead of wrapping
+        # (the pyspark 4 default, pinned so results never depend on it)
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")

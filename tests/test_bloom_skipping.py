@@ -3,6 +3,8 @@ where min/max bounds cannot prune — overlapping ranges, disjoint value
 sets. Bloom bitmaps ride the same catalog stats entries as the bounds;
 a Bloom 'no' is definitive, results stay identical to the plain
 filtered scan (pruning is never a correctness dependency)."""
+import pytest
+
 from patterns_devkit_spark import Table
 from patterns_devkit_spark.node import skipping
 
@@ -78,3 +80,65 @@ def test_bloom_survives_delete_rewrite(engine):
         kept, total = t.prune_files([("k", "=", "c")])
         assert total >= 1 and len(kept) == 1
         assert [r["k"] for r in t.read_pruned([("k", "=", "c")]).collect()] == ["c"]
+
+
+@pytest.mark.parametrize("mode", ["hardlink", "reference"])
+def test_upsert_hashes_only_the_batch_keys(engine, spark, monkeypatch, mode):
+    """A merge-on-read upsert of k keys hashes at most k values into
+    bitmaps: the new version's carried files copy their parent's
+    entries (bitmaps included) instead of being re-read. The old-image
+    probe's hashing inside skipping.prune is read work, not counted."""
+    monkeypatch.setenv("PDS_LINK_MODE", mode)
+    name = f"blh_{mode}"
+    with engine.node_context("w", outputs={"out": name}):
+        t = Table("out", "w")
+        t.init(unique_on=["id"], merge_on_read=True, stat_columns=["id"], bloom_columns="id")
+        for lo in (0, 300, 600):
+            t.append(spark.createDataFrame([(i, "a") for i in range(lo, lo + 300)], "id long, v string").coalesce(1))
+            t.flush()
+        hashed, probing = [], [False]
+        prune, positions = skipping.prune, skipping._bloom_positions
+
+        def counting_prune(*a, **kw):
+            probing[0] = True
+            try:
+                return prune(*a, **kw)
+            finally:
+                probing[0] = False
+
+        def counting_positions(value, *a, **kw):
+            if not probing[0]:
+                hashed.append(value)
+            return positions(value, *a, **kw)
+
+        monkeypatch.setattr(skipping, "prune", counting_prune)
+        monkeypatch.setattr(skipping, "_bloom_positions", counting_positions)
+        batch = [(5, "b"), (650, "b"), (2_000, "b")]
+        t.upsert(spark.createDataFrame(batch, "id long, v string"))
+        t.flush()
+    assert 0 < len(hashed) <= len(batch)
+    stats = engine.catalog.get_file_stats(name, engine.catalog.get_active_version(name))
+    assert len(stats) >= 4 and all("bloom" in e["cols"]["id"] for e in stats.values())
+
+
+def test_bloom_cap_boundary(engine, spark):
+    """A file with BLOOM_MAX_KEYS distinct keys gets a bitmap (and it
+    prunes absent keys); one more key and the entry keeps bounds only.
+    Pruned reads equal the plain filter either way."""
+    cap = skipping.BLOOM_MAX_KEYS
+    for name, n in (("blcap_at", cap), ("blcap_over", cap + 1)):
+        with engine.node_context("w", outputs={"out": name}):
+            t = Table("out", "w")
+            t.init(bloom_columns="k")
+            t.append(spark.range(n).selectExpr("id * 2 AS k").coalesce(1))
+            t.flush()
+            (entry,) = engine.catalog.get_file_stats(name, engine.catalog.get_active_version(name)).values()
+            info = entry["cols"]["k"]
+            assert ("bloom" in info) == (n == cap)
+            assert (info["min"], info["max"]) == (0, 2 * (n - 1))
+            # odd keys are absent but inside the bounds: only a bitmap prunes them
+            pruned = sum(not t.prune_files([("k", "=", v)])[0] for v in range(1, 101, 2))
+            assert pruned >= 40 if n == cap else pruned == 0
+            for pred, sql in ((("k", "=", 7), "k = 7"), (("k", "=", 10), "k = 10"), (("k", "in", [3, 4]), "k in (3, 4)")):
+                got = sorted(r["k"] for r in t.read_pruned([pred]).collect())
+                assert got == sorted(r["k"] for r in t.read_spark().filter(sql).collect()), (name, pred)

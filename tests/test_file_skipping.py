@@ -175,3 +175,101 @@ def test_collect_file_stats_all_null_file(engine, tmp_path, spark):
     (entry,) = stats.values()
     assert entry["cols"]["v"] == {"min": None, "max": None, "nulls": 2}
     assert skipping.prune(stats, [("v", "=", 1)]) == []
+
+
+def _mor_table(engine, spark, name):
+    """Keyed merge-on-read table of three interleaved files (id mod 3):
+    bounds overlap, so only the Bloom bitmaps tell the files apart."""
+    t = Table("out", "w")
+    t.init(unique_on=["id"], merge_on_read=True, stat_columns=["id"], bloom_columns="id")
+    for r in range(3):
+        t.append(spark.createDataFrame([(i, "a") for i in range(r, 300, 3)], "id long, v string").coalesce(1))
+        t.flush()
+    return t
+
+
+def test_carry_modes_agree_and_point_reads_stay_read_only(engine, spark, monkeypatch):
+    """append -> upsert -> DV delete -> compact keeps the same pruning
+    under hardlink and reference carries: carried files keep their
+    entries (bitmaps included) in both modes. After the DV delete a
+    point read prunes from the committed entries and opens no catalog
+    transaction (no lazy backfill commit)."""
+    preds = [("id", "=", v) for v in (4, 5, 151, 299, 1_000, 5_000)] + [("id", "between", (10, 20))]
+
+    def signature(t, name):
+        stats = engine.catalog.get_file_stats(name, engine.catalog.get_active_version(name))
+        out = []
+        for p in preds:
+            kept, total = t.prune_files([p])
+            ids = [stats[k]["cols"]["id"] for k in kept]
+            out.append((total, sorted((i["min"], i["max"]) for i in ids)))
+        return out, stats
+
+    backend = engine.catalog._backend
+    txns = []
+    transaction = backend.transaction
+    monkeypatch.setattr(backend, "transaction", lambda: (txns.append(1), transaction())[1])
+    runs = {}
+    for mode in ("hardlink", "reference"):
+        monkeypatch.setenv("PDS_LINK_MODE", mode)
+        name = f"fsc_{mode}"
+        sigs = []
+        with engine.node_context("w", outputs={"out": name}):
+            t = _mor_table(engine, spark, name)
+            sigs.append(signature(t, name)[0])
+            t.upsert(spark.createDataFrame([(4, "b"), (1_000, "b")], "id long, v string"))
+            t.flush()
+            sig, stats = signature(t, name)
+            sigs.append(sig)
+            assert all("bloom" in e["cols"]["id"] for e in stats.values()), mode
+            assert t.delete_where("id = 151", vectorized=True) == 1
+            sig, stats = signature(t, name)
+            sigs.append(sig)
+            assert len(stats) >= 4 and all("bloom" in e["cols"]["id"] for e in stats.values()), mode
+
+            n0 = len(txns)
+            got = sorted(r["id"] for r in t.read_pruned([("id", "=", 5)]).collect())
+            kept, total = t.prune_files([("id", "=", 5)])
+            assert got == [5] and total >= 2 and len(kept) < total, (mode, kept, total)
+            assert len(txns) == n0, mode
+
+            # one output file: coalesce groups files in read order, which
+            # differs between the modes' manifests
+            t.compact(target_files=1)
+            sig, stats = signature(t, name)
+            sigs.append(sig)
+            assert all("bloom" in e["cols"]["id"] for e in stats.values()), mode
+        runs[mode] = sigs
+    assert runs["hardlink"] == runs["reference"]
+
+
+def test_stats_collect_outside_commit(engine, spark, monkeypatch):
+    """No data file is opened for the skipping index while a
+    commit_batch document is open: every write collects its stats first
+    and commits metadata only (the catalog's cross-process lock is held
+    for the whole batch)."""
+    import pyarrow.parquet as pq
+
+    seen = []
+    opener = pq.ParquetFile
+
+    def guarded(*a, **kw):
+        seen.append(getattr(engine.catalog._batch_tls, "doc", None) is not None)
+        return opener(*a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", guarded)
+    with engine.node_context("w", outputs={"out": "fsl"}):
+        t = _mor_table(engine, spark, "fsl")
+        t.upsert(spark.createDataFrame([(4, "b"), (1_000, "b")], "id long, v string"))
+        t.flush()
+        t.update_where({"v": "'c'"}, "id = 7", vectorized=True)
+        t.delete_where("id = 8", vectorized=True)
+        t.purge_deletes()
+        t.delete_where("id = 10")
+        t.compact(target_files=1)
+        assert sorted(r["id"] for r in t.read_pruned([("id", "in", [4, 7, 8, 10])]).collect()) == [4, 7]
+        # the SQL-node / CTAS path records its own entries too
+        t.write_dataframe_as_new_version(spark.createDataFrame([(1, "x"), (2, "y")], "id long, v string"))
+        stats = engine.catalog.get_file_stats("fsl", engine.catalog.get_active_version("fsl"))
+        assert stats and all("bloom" in e["cols"]["id"] for e in stats.values())
+    assert seen and not any(seen)

@@ -4,10 +4,11 @@
 #   1. full pytest under the default (json) catalog backend
 #   2. full pytest under PDS_CATALOG_BACKEND=sqlite — the env var must
 #      never shadow an existing store (split-brain regression class)
-#   3. write-path suites under PDS_LINK_MODE=reference — the
-#      object-storage simulation (no hardlinks; zero-copy must survive
-#      as pure manifest refs)
-#   4. driver-gate parity mimic at sf0.01
+#   3. write-path and skipping suites under PDS_LINK_MODE=reference —
+#      the object-storage simulation (no hardlinks; zero-copy must
+#      survive as pure manifest refs, carried files keep their stats)
+#   4. write-path and skipping suites under the objectstore backend
+#   5. oracle parity against DuckDB at sf0.01 (tools/parity.py)
 # Usage: tools/verify_round.sh [--fast]   (--fast: write-path suites only
 # for the sqlite sweep, like CLAUDE.md's 2.5-min variant)
 set -euo pipefail
@@ -26,10 +27,10 @@ tests/test_deletion_vectors.py tests/test_time_travel.py tests/test_merge_on_rea
 tests/test_branches.py tests/test_mor_model.py tests/test_change_feed.py \
 tests/test_sql_merge.py"
 
-echo "== [1/4] full suite, default backend =="
+echo "== [1/5] full suite, default backend =="
 python -m pytest tests/ -q
 
-echo "== [2/4] sqlite-backend sweep =="
+echo "== [2/5] sqlite-backend sweep =="
 if [[ "${1:-}" == "--fast" ]]; then
   PDS_CATALOG_BACKEND=sqlite python -m pytest $WRITE_PATH_SUITES -q
 else
@@ -41,10 +42,12 @@ PDS_LINK_MODE=reference python -m pytest $WRITE_PATH_SUITES \
   tests/test_extensions.py tests/test_pipeline_ops.py \
   tests/test_import_export.py tests/test_manifest_versions.py \
   tests/test_matview.py tests/test_matview_lineage.py \
+  tests/test_file_skipping.py tests/test_bloom_skipping.py \
   tests/test_concurrency_fuzz.py -q
 
 echo "== [4/5] objectstore-backend (lock-less conditional-put metastore) sweep =="
-PDS_CATALOG_BACKEND=objectstore python -m pytest $WRITE_PATH_SUITES -q
+PDS_CATALOG_BACKEND=objectstore python -m pytest $WRITE_PATH_SUITES \
+  tests/test_file_skipping.py tests/test_bloom_skipping.py -q
 
 echo "== [5/5] oracle parity at sf0.01 =="
 PYTHONPATH=. python tools/parity.py /root/testdata/sf0.01
